@@ -108,7 +108,7 @@ def cmd_compact(args) -> int:
     spark = _get_spark("compact")
     roots = [raw_root(args.base_dir)] + [derived_root(args.base_dir, tf) for tf in TF_MINUTES]
     for root in roots:
-        if os.path.exists(os.path.join(root, "_staging")) or os.path.exists(root):
+        if os.path.exists(root):
             n = lake.compact_staging(spark, root)
             print(json.dumps({"root": root, "rows_folded": int(n)}))
     return 0

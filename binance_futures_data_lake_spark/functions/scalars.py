@@ -1,21 +1,9 @@
-"""Scalar helpers (SURVEY §2.7) — null-safe math idioms of the reference."""
+"""Scalar helpers (SURVEY §2.7): clipping, sigmoid and engine-portable rounding."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def nullif_zero(c: Column) -> Column:
-    """Null-guard division denominator: pandas ``.replace(0.0, np.nan)``
-    (build_mtf_context_h4_v1.py:75-106)."""
-    return F.nullif(c, F.lit(0.0))
-
-
-def scrub_nonfinite(c: Column) -> Column:
-    """inf/-inf/NaN → null (build_mtf_context_h4_v1.py:166,
-    run_ml_m15_v1.py:162)."""
-    return F.when(F.isnan(c) | (F.abs(c) == float("inf")), F.lit(None)).otherwise(c)
 
 
 def clip(c: Column, lo: float, hi: float) -> Column:
@@ -26,10 +14,6 @@ def clip(c: Column, lo: float, hi: float) -> Column:
 def sigmoid(c: Column) -> Column:
     """Logistic sigmoid (run_ml_m15_v1.py:62-64)."""
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-c))
-
-
-def safe_div(num: Column, den: Column) -> Column:
-    return num / nullif_zero(den)
 
 
 def round_half_away(c: Column, scale: int) -> Column:

@@ -5,12 +5,12 @@ Reference: missing minutes via ``pd.date_range(min,max).difference(present)``
 and consolidation of missing minutes into contiguous [start,end] ranges
 (gaps_report.py:13-29).
 
-Spark-first: the expected grid is GENERATED per key with
-``sequence() + explode`` (never materialized as a stored table), missing
-buckets fall out of a ``left_anti`` join, and range consolidation is the
-classic gaps-and-islands trick — for a regular grid, ``bucket_index −
-row_number`` is constant within a contiguous missing run, so one window +
-one groupBy consolidates. Everything shuffles only on the key column.
+Spark-first: the grid is never generated. A run of missing grid points is
+exactly the open interval between two consecutive present buckets, so one
+``lag`` over a per-key window on the grid-snapped timestamp yields every
+gap directly. ``_with_gaps`` holds that recurrence once; ``missing_ranges``
+keeps the gap rows, and ``maintenance.audit_klines`` sums their sizes
+inside its one-pass audit. Everything shuffles only on the key column.
 """
 
 from __future__ import annotations
@@ -21,47 +21,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def expected_grid(
-    df: DataFrame,
-    step_minutes: int | float,
-    by: Sequence[str],
-    ts_col: str = "ts",
+def _with_gaps(
+    df: DataFrame, step_us: int, by: Sequence[str], ts_col: str = "ts"
 ) -> DataFrame:
-    """Per-key dense grid from min(ts) to max(ts) at ``step_minutes``.
-
-    Grid points are the observed min/max per key, stepped by the interval —
-    identical to ``pd.date_range(tmin, tmax, freq=step)``.
-    """
-    step_us = int(step_minutes * 60_000_000)
-    bounds = df.groupBy(*by).agg(
-        F.min(ts_col).alias("__t0"), F.max(ts_col).alias("__t1")
+    """The gap recurrence: ``df`` plus ``__us`` (``ts_col`` snapped to the
+    grid), ``__diff`` (distance to the key's previous snapped bucket) and
+    ``__n_missing`` (grid points strictly between the two; null where
+    there are none)."""
+    w = Window.partitionBy(*by).orderBy("__us")
+    step = F.lit(step_us)
+    diff = F.col("__us") - F.lag("__us").over(w)
+    return (
+        df.withColumn("__us", F.floor(F.unix_micros(F.col(ts_col)) / step) * step)
+        .withColumn("__diff", diff)
+        .withColumn(
+            "__n_missing",
+            F.when(F.col("__diff") > step, (F.col("__diff") / step).cast("long") - F.lit(1)),
+        )
     )
-    return bounds.select(
-        *by,
-        F.explode(
-            F.sequence(
-                F.unix_micros("__t0"),
-                F.unix_micros("__t1"),
-                F.lit(step_us),
-            )
-        ).alias("__us"),
-    ).select(*by, F.timestamp_micros(F.col("__us")).alias(ts_col))
-
-
-def missing_buckets(
-    df: DataFrame,
-    step_minutes: int | float,
-    by: Sequence[str],
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Grid points with no observed row — the anti-join gap list.
-
-    The right side is deliberately NOT de-duplicated: left_anti semantics
-    ignore right-side multiplicity, so a distinct() there is a pure extra
-    shuffle. When the input is already (key, bucket)-unique, the grid
-    bounds and the anti-join probe both reuse the same exchange."""
-    grid = expected_grid(df, step_minutes, by, ts_col)
-    return grid.join(df.select(*by, ts_col), on=[*by, ts_col], how="left_anti")
 
 
 def missing_ranges(
@@ -90,21 +67,15 @@ def missing_ranges(
     buckets produce diff = 0 pairs, which the filter drops).
     """
     step_us = int(step_minutes * 60_000_000)
-    w = Window.partitionBy(*by).orderBy("__us")
-    snapped = df.select(
-        *by,
-        (F.floor(F.unix_micros(F.col(ts_col)) / F.lit(step_us)) * F.lit(step_us)).alias("__us"),
-    )
-    diff = F.col("__us") - F.lag("__us").over(w)
     return (
-        snapped.withColumn("__diff", diff)
-        .filter(F.col("__diff") > F.lit(step_us))
+        _with_gaps(df.select(*by, ts_col), step_us, by, ts_col)
+        .filter(F.col("__n_missing").isNotNull())
         .select(
             *by,
             F.timestamp_micros(F.col("__us") - F.col("__diff") + F.lit(step_us)).alias(
                 "gap_start"
             ),
             F.timestamp_micros(F.col("__us") - F.lit(step_us)).alias("gap_end"),
-            ((F.col("__diff") / F.lit(step_us)).cast("long") - F.lit(1)).alias("n_missing"),
+            F.col("__n_missing").alias("n_missing"),
         )
     )

@@ -2,8 +2,8 @@
 
 The reference has no unit tests; correctness is enforced by data-quality
 audit programs (src/bfdl/transforms/verify_all.py:247-338,
-integrity_checks.py:26-85, audit_derived.py:98-162). Those invariants are
-re-expressed here as ONE aggregation pass per table + the gap machinery:
+integrity_checks.py:26-85, audit_derived.py:98-162). ``audit_klines``
+re-expresses their invariants as ONE query and ONE action per table:
 
 - zero duplicate (symbol, open_time_ms) keys
 - strict per-symbol time monotonicity
@@ -13,9 +13,12 @@ re-expressed here as ONE aggregation pass per table + the gap machinery:
 - OHLC bar invariants (FIXTURES.md conventions): low <= min(o,c),
   high >= max(o,c), taker <= volume, volumes >= 0
 
-Everything is a distributed aggregation: one shuffle on symbol, tiny
-result to the driver. Exit-code semantics (verify_all.py:341-348) map to
-``ok`` booleans per check.
+Shape: one window partitioned by the key, ordered two ways (by
+``open_time_ms`` for the duplicate / order / step checks, by the
+grid-snapped ``ts`` for the gap recurrence ``gaps._with_gaps``); Spark plans
+both orderings on a single exchange. A per-key aggregation counts every
+check, and a global sum brings a one-row result to the driver. Exit-code
+semantics (verify_all.py:341-348) map to ``ok`` booleans per check.
 """
 
 from __future__ import annotations
@@ -25,7 +28,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from binance_futures_data_lake_spark.operators.gaps import missing_ranges
+from binance_futures_data_lake_spark.operators.gaps import _with_gaps, missing_ranges
 
 
 def audit_klines(
@@ -36,66 +39,45 @@ def audit_klines(
     """Full temporal + schema integrity audit; returns a report dict.
 
     ``step_ms`` is 60_000 for M1, n·60_000 for derived TFs
-    (audit_derived.py grid: step = n_minutes * 60_000).
+    (audit_derived.py grid: step = n_minutes * 60_000). ``df`` needs
+    ``ts`` and ``open_time_ms``; the bar check runs when OHLC columns exist
+    and reports ``None`` otherwise.
     """
     by = list(by)
-    key = [*by, "open_time_ms"]
-
-    dup_count = (
-        df.groupBy(*key).count().filter(F.col("count") > 1).count()
+    t = F.col("open_time_ms")
+    w = Window.partitionBy(*by).orderBy(t)
+    rows = _with_gaps(df, step_ms * 1_000, by).select(
+        "*", F.lag(t).over(w).alias("__prev"), F.lag(t, 2).over(w).alias("__prev2")
     )
-
-    w = Window.partitionBy(*by).orderBy("open_time_ms")
-    with_prev = df.select(*key).withColumn("__prev", F.lag("open_time_ms").over(w))
-    non_monotonic = with_prev.filter(
-        F.col("__prev").isNotNull() & (F.col("open_time_ms") <= F.col("__prev"))
-    ).count()
-    off_grid_steps = with_prev.filter(
-        F.col("__prev").isNotNull()
-        & ((F.col("open_time_ms") - F.col("__prev")) % step_ms != 0)
-    ).count()
-
-    bounds = df.groupBy(*by).agg(
-        F.min("open_time_ms").alias("t0"),
-        F.max("open_time_ms").alias("t1"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    per_symbol = bounds.select(
-        *by,
-        "n_rows",
-        ((F.col("t1") - F.col("t0")) / step_ms + 1).cast("long").alias("expected_rows"),
-    )
-    totals = per_symbol.agg(
-        F.sum("n_rows").alias("n_rows"), F.sum("expected_rows").alias("expected_rows")
-    ).first()
-
-    ts_mismatch = df.filter(
-        F.unix_millis("ts") != F.col("open_time_ms")
-    ).count() if "ts" in df.columns else None
-
-    bar_violations = df.filter(
-        (F.col("low") > F.least("open", "close"))
-        | (F.col("high") < F.greatest("open", "close"))
-        | (F.col("taker_buy_base") > F.col("volume_base"))
-        | (F.col("volume_base") < 0)
-        | (F.col("n_trades") < 0)
-    ).count() if "low" in df.columns else None
-
-    gaps = missing_ranges(
-        df.select(*by, "ts"), step_ms / 60_000.0, by
-    )
-    gap_rows = gaps.agg(F.sum("n_missing")).first()[0] or 0
-
-    report = {
-        "n_rows": int(totals["n_rows"] or 0),
-        "expected_rows": int(totals["expected_rows"] or 0),
-        "n_duplicate_keys": int(dup_count),
-        "n_non_monotonic": int(non_monotonic),
-        "n_off_grid_steps": int(off_grid_steps),
-        "n_missing_grid_rows": int(gap_rows),
-        "n_ts_mismatch": None if ts_mismatch is None else int(ts_mismatch),
-        "n_bar_invariant_violations": None if bar_violations is None else int(bar_violations),
+    # lag is null on a key's first row, so every comparison with it is null
+    # there and count_if skips it
+    prev, prev2 = F.col("__prev"), F.col("__prev2")
+    checks = {
+        # a key with k copies counts once: only its second copy matches
+        "n_duplicate_keys": F.count_if((t == prev) & (prev2.isNull() | (prev2 != prev))),
+        "n_non_monotonic": F.count_if(t <= prev),
+        "n_off_grid_steps": F.count_if((t - prev) % step_ms != 0),
+        "n_missing_grid_rows": F.sum("__n_missing"),
+        "n_ts_mismatch": F.count_if(F.unix_millis("ts") != t),
     }
+    if "low" in df.columns:
+        checks["n_bar_invariant_violations"] = F.count_if(
+            (F.col("low") > F.least("open", "close"))
+            | (F.col("high") < F.greatest("open", "close"))
+            | (F.col("taker_buy_base") > F.col("volume_base"))
+            | (F.col("volume_base") < 0)
+            | (F.col("n_trades") < 0)
+        )
+    per_key = rows.groupBy(*by).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        ((F.max(t) - F.min(t)) / step_ms + 1).cast("long").alias("expected_rows"),
+        *[c.alias(name) for name, c in checks.items()],
+    )
+    names = ["n_rows", "expected_rows", *checks]
+    totals = per_key.agg(*[F.sum(n).alias(n) for n in names]).first()
+
+    report = {n: int(totals[n] or 0) for n in names}
+    report.setdefault("n_bar_invariant_violations", None)
     report["ok"] = (
         report["n_duplicate_keys"] == 0
         and report["n_non_monotonic"] == 0

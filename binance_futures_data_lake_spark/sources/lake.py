@@ -51,10 +51,15 @@ def staging_path(root: str) -> str:
 
 
 def write_canonical(df: DataFrame, root: str, mode: str = "overwrite") -> None:
-    """Hive-partitioned canonical write (S9 + layout of §1.2)."""
+    """Hive-partitioned canonical write (S9 + layout of §1.2).
+
+    An overwrite replaces only the partitions ``df`` holds, whatever the
+    session's overwrite mode. Rows land in a staging directory before any
+    partition is replaced, so ``df`` may be read from the same lake."""
     (
         with_partition_cols(df)
         .write.mode(mode)
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*PARTITION_COLS)
         .parquet(canonical_path(root))
     )
@@ -110,7 +115,6 @@ def compact_staging(
     stag = staging_path(root)
     if not _exists(spark, stag):
         return 0
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     staged = spark.read.parquet(stag)
     n_staged = staged.count()
     if n_staged == 0:
@@ -139,23 +143,12 @@ def compact_staging(
     (
         result.repartition(*[F.col(c) for c in PARTITION_COLS])
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*PARTITION_COLS)
         .parquet(canon)
     )
     _delete(spark, stag)
     return n_staged
-
-
-def merge_upsert(
-    spark: SparkSession,
-    root: str,
-    new_df: DataFrame,
-    keys: Sequence[str] = ("symbol", "open_time_ms"),
-) -> None:
-    """Month merge-write (S13: aggregate_tf.py:164-179, backfill_*): read
-    overlapping partitions + union + dedup(new wins) + dynamic-overwrite."""
-    stage_append(new_df, root)
-    compact_staging(spark, root, keys)
 
 
 def _delete(spark: SparkSession, path: str) -> None:

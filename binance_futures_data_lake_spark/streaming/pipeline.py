@@ -181,10 +181,9 @@ def parquet_upsert(
         result = dedup_keep_last(
             new_p.withColumn("__prec", F.lit(1)), list(keys), ["__prec"]
         ).drop("__prec")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     result.repartition(F.col("p_day")).write.mode(
         "overwrite" if exists else "errorifexists"
-    ).partitionBy("p_day").parquet(path)
+    ).option("partitionOverwriteMode", "dynamic").partitionBy("p_day").parquet(path)
 
 
 def foreach_batch_upsert(

@@ -56,6 +56,29 @@ def test_lake_roundtrip_compact_and_audit(spark, tmp_root):
     assert report2["ok"], report2
 
 
+def test_merge_writes_keep_session_overwrite_mode(spark, tmp_root):
+    """compact_staging and parquet_upsert replace only the partitions they
+    touch, and leave the session's overwrite mode as they found it."""
+    from binance_futures_data_lake_spark.streaming.pipeline import parquet_upsert
+
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.unset(conf)  # back to the default, whatever ran before
+    before = spark.conf.get(conf)
+    df = synthetic_klines_m1(spark, symbols=("AAA", "BBB"), n_minutes=120)
+    lake.write_canonical(df, tmp_root)
+    lake.stage_append(df.filter(F.col("symbol") == "AAA"), tmp_root)
+    assert lake.compact_staging(spark, tmp_root) == 120
+    assert spark.conf.get(conf) == before
+    assert lake.read_lake(spark, tmp_root).count() == 240  # BBB untouched
+
+    path = f"{tmp_root}/upsert"
+    for days in (0, 1):
+        batch = df.withColumn("bucket_ts", F.col("ts") + F.expr(f"INTERVAL {days} DAY"))
+        parquet_upsert(spark, path, batch, ["symbol", "bucket_ts"])
+    assert spark.conf.get(conf) == before
+    assert spark.read.parquet(path).count() == 480  # day 0 untouched
+
+
 def test_gap_detection_on_holed_grid(spark, tmp_root):
     df = synthetic_klines_m1(spark, symbols=("AAA",), n_minutes=1440)
     # carve two known holes: minutes [100, 110) and [500, 503)
